@@ -1861,7 +1861,8 @@ def audience_overlap(
     engine FLOOR here — 3.4 s @R50 → 4.2 s @R200 → 5.1 s @R500 (50 M
     events) while the single-node side grows with the event count
     (0.15 → 0.33 → 0.90 s), ratio 23× → 12.7× → 5.7× monotonically;
-    extrapolated crossing ~R2500 (BASELINE.md, RECORDED_R9_TIERS).
+    extrapolated crossing ~R2500 (BASELINE.md, "Round-9: slope closures
+    for the two open r8 cells").
     The absolute cost is scan + two word-sized exchanges — there is no
     plan change that removes it, and at data-dominated scale the flat
     side wins by construction."""
@@ -2417,8 +2418,8 @@ def spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     (groups × 256 buckets of parallelism; bit-identical min-ranks,
     gate-proven), with ONE bounds collect and base-table offset scans
     shared across the two rankings — R20 measured 25.9 → ~7 s
-    (RECORDED_R9_TIERS). The oracle keeps the plain rank() window
-    (single-node engines parallelize their own sorts)."""
+    (BASELINE.md, "Round-9 re-plans"). The oracle keeps the plain
+    rank() window (single-node engines parallelize their own sorts)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.floor(F.col("l_quantity") * 100).cast("long").alias("q"),

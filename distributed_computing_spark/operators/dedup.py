@@ -278,13 +278,20 @@ def ngram_jaccard_pairs(
     tail = F.expr("slice(docs, pos + 2, size(docs) - pos - 1)")
     pairs_ab = exploded.select("a", F.explode(tail).alias("b"))
     if pack:
+        # bigint before the shift: on int ids shiftleft(a, 32) is a
+        # shift by 0, and distinct pairs would share one key
+        id_type = documents.schema["doc_id"].dataType
         common = (
-            pairs_ab.select(F.expr("shiftleft(a, 32) | b").alias("pk"))
+            pairs_ab.select(
+                F.expr(
+                    "shiftleft(cast(a as bigint), 32) | cast(b as bigint)"
+                ).alias("pk")
+            )
             .groupBy("pk")
             .agg(F.count("*").alias("n_common"))
             .select(
-                F.expr("shiftright(pk, 32)").alias("a"),
-                F.expr("pk & 4294967295").alias("b"),
+                F.expr("shiftright(pk, 32)").cast(id_type).alias("a"),
+                F.expr("pk & 4294967295").cast(id_type).alias("b"),
                 "n_common",
             )
         )

@@ -464,7 +464,7 @@ def copurchase_triangles(
     A/B at sf0.1 (local[32]): clone wins 6/7 pairs, warm 3.4-4.6 s vs
     3.8-4.9 (and 4.4 vs 7.3 cold); above the bound the session is
     untouched and AQE's coalesce/skew machinery keeps the fact
-    exchanges healthy (the pk-R8+ wedge tiers)."""
+    exchanges healthy (the above-gate wedge tiers)."""
     from distributed_computing_spark.sources.catalog import load_table
 
     if load_table(spark, sf_dir, "lineitem").count() <= 10_000_000:

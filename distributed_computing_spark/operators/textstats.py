@@ -261,7 +261,8 @@ def bigram_pmi(
     4.8 → 3.8 → 5.5 s across R50/R100/R200 (1 M docs) — the floor is
     the Arrow tokenize pass — while the single-node side doubles per
     tier (0.38 → 0.63 → 1.13 s), ratio 12.5× → 6.0× → 4.9×;
-    extrapolated crossing ~R800 (BASELINE.md, RECORDED_R9_TIERS)."""
+    extrapolated crossing ~R800 (BASELINE.md, "Round-9: slope closures
+    for the two open r8 cells")."""
     import re
     from collections import Counter
 

@@ -1,11 +1,9 @@
-"""bench.py tail-compaction purity (ADVICE r5).
+"""bench.py's stdout tail record and the crossover weak list.
 
-_compact_for_tail receives a payload that embeds module-global recorded
-tier dicts BY REFERENCE (tools/crossover.RECORDED_*_TIERS); the
-compactor and its shed loop must never mutate the caller's structures —
-round 5's `rec |= pop(...)` folded KV tiers into the dedup global in
-place, and the shed path popped keys off the original crossover dict
-when 'queries' was absent. Pure-python tests, no Spark session.
+Callers keep only the last 2000 chars of bench stdout, so the tail
+line is a fixed projection of the payload that must fit _TAIL_BUDGET
+at its widest; the weak list with its far-tier dispositions lives in
+.bench_full.json. Pure-python tests, no Spark session.
 """
 
 from __future__ import annotations
@@ -13,283 +11,171 @@ from __future__ import annotations
 import copy
 import json
 
+import pytest
 
-def _payload(with_queries: bool) -> dict:
-    dedup = {"minhash_lsh_exact": {"R20": {"spark_s": 32.9, "duckdb_s": 49.8}}}
-    kv = {"kv_replay_hotkey": {"R50": {"spark_s": 6.86, "duckdb_s": 2.29}}}
-    xo = {
-        "R": 20,
-        "dedup_tier_recorded": dedup,
-        "kv_tier_recorded": kv,
-        "rows": {"word_count_top10": 123},
+_XO_CELLS = ("dup_spans", "minhash_lsh_exact", "copurchase_triangles", "bigram_pmi")
+
+
+def _payload(cell_s: float) -> dict:
+    from bench import HEADLINE
+    from tools.crossover import DEFAULT_QUERIES, weak_cells
+
+    queries = {name: cell_s for name in HEADLINE}
+    queries.update({f"xo20:{q}": cell_s for q in _XO_CELLS})
+    xo_queries = {
+        name: {"spark_s": 12.345, "duckdb_s": 3.456} for name in DEFAULT_QUERIES
     }
-    if with_queries:
-        xo["queries"] = {
-            "word_count_top10": {"spark_s": 0.784, "duckdb_s": 0.112}
-        }
     return {
-        "metric": "headline_queries_total",
-        "value": 43.375,
-        "unit": "sec",
-        "queries": {"word_count_top10": 2.468},
-        "sf": 0.1,
-        "crossover": xo,
-    }
-
-
-def test_compact_does_not_mutate_payload_or_tier_globals():
-    from bench import _compact_for_tail
-
-    payload = _payload(with_queries=True)
-    dedup_ref = payload["crossover"]["dedup_tier_recorded"]
-    before = copy.deepcopy(payload)
-    out = _compact_for_tail(payload)
-    assert payload == before, "caller's payload mutated"
-    # the KV fold must land in the output's merged view, NOT inside the
-    # (module-global-by-reference) dedup dict
-    assert "kv_replay_hotkey" not in dedup_ref
-    assert set(out["crossover"]["recorded"]) == {
-        "minhash_lsh_exact",
-        "kv_replay_hotkey",
-    }
-    assert out["crossover"]["queries"]["word_count_top10"] == [0.78, 0.11]
-
-
-def test_shed_without_queries_copies_crossover():
-    import bench
-
-    payload = _payload(with_queries=False)
-    before = copy.deepcopy(payload)
-    # force shedding: shrink the budget so every optional section drops
-    saved = bench._TAIL_BUDGET
-    bench._TAIL_BUDGET = 1
-    try:
-        out = bench._compact_for_tail(payload)
-    finally:
-        bench._TAIL_BUDGET = saved
-    assert payload == before, "shed loop mutated the caller's crossover"
-    for k in ("rows", "recorded", "queries"):
-        assert k not in out["crossover"]
-
-
-def test_compact_line_fits_tail_budget():
-    from bench import _TAIL_BUDGET, _compact_for_tail
-
-    out = _compact_for_tail(_payload(with_queries=True))
-    assert len(json.dumps(out, separators=(",", ":"))) <= _TAIL_BUDGET
-
-
-def test_weak_list_rides_the_tail_and_survives_shedding():
-    """VERDICT r7 item 3: the >2x per-query crossover cells must stay in
-    the driver-visible tail even after the full per-query arrays are
-    shed for size."""
-    import bench
-
-    payload = _payload(with_queries=True)
-    payload["crossover"]["queries"]["fast_query"] = {
-        "spark_s": 0.5,
-        "duckdb_s": 1.0,
-    }
-    out = bench._compact_for_tail(payload)
-    # 0.784/0.112 = 7.0x is weak; 0.5/1.0 = 0.5x is not. Round 12:
-    # each weak cell now carries its far-tier disposition as a compact
-    # string "<r20>><tier>:<far_ratio><class-letter>"; word_count has
-    # no recorded far tier, so it reads "<r20>:o" (open).
-    assert out["crossover"]["weak"] == {"word_count_top10": "7.0:o"}
-
-    saved = bench._TAIL_BUDGET
-    bench._TAIL_BUDGET = 1
-    try:
-        out = bench._compact_for_tail(payload)
-    finally:
-        bench._TAIL_BUDGET = saved
-    assert "queries" not in out["crossover"]
-    assert out["crossover"]["weak"] == {"word_count_top10": "7.0:o"}
-
-
-def test_fine_shed_stages_keep_recorded_echo():
-    """Round 8: when the line is modestly over budget, the weak cap and
-    integer headline timings shed BEFORE the recorded echo is dropped
-    wholesale."""
-    import json
-
-    import bench
-
-    payload = _payload(with_queries=True)
-    payload["queries"] = {f"q{i:02d}_long_name": 1.2345 for i in range(50)}
-    payload["crossover"]["queries"].update(
-        {f"weak{i}": {"spark_s": 9.0, "duckdb_s": 1.0} for i in range(14)}
-    )
-    payload["crossover"]["recorded_echo"] = {
-        "dup_spans": {"R50": [59.7, 270.2]}
-    }
-    saved = bench._TAIL_BUDGET
-    # budget forces the fine stages but is generous enough to keep the
-    # recorded echo once they've fired
-    bench._TAIL_BUDGET = 1250
-    try:
-        out = bench._compact_for_tail(payload)
-    finally:
-        bench._TAIL_BUDGET = saved
-    line = json.dumps(out, separators=(",", ":"))
-    assert len(line) <= 1250
-    assert out["crossover"]["recorded"] == {"dup_spans": {"R50": [59.7, 270.2]}}
-    assert len(out["crossover"]["weak"]) == 10
-    assert all(isinstance(v, int) for v in out["queries"].values())
-    # caller untouched (the ADVICE r5 purity rule)
-    assert all(isinstance(v, float) for v in payload["queries"].values())
-
-
-def test_recorded_echo_takes_precedence_and_fits():
-    """Round 6: the curated `recorded_echo` subset (not the full tier
-    tables) rides stdout next to a 40-query headline, and the line
-    still fits the tail budget."""
-    import json
-
-    from bench import _TAIL_BUDGET, _compact_for_tail
-
-    payload = {
-        "metric": "headline_queries_total",
-        "value": 99.1,
-        "unit": "sec",
-        "queries": {f"query_name_{i}": 1.2345 for i in range(40)},
-        "sf": 0.1,
-        "crossover": {
-            "R": 20,
-            "rows": {"documents": 100000, "events": 2000000,
-                     "orders": 3000000, "lineitem": 12000000},
-            "queries": {
-                f"crossover_query_{i}": {"spark_s": 1.234, "duckdb_s": 2.345}
-                for i in range(19)
-            },
-            "spark_total_s": 83.474,
-            "duckdb_total_s": 92.332,
-            "spark_over_duckdb": 0.904,
-            "dedup_tier_recorded": {
-                "giant_family": {
-                    f"R{r}": {"spark_s": 1.0, "duckdb_s": 2.0}
-                    for r in range(100)
-                }
-            },
-            "recorded_echo": {
-                "dup_spans": {"R50": [59.7, 270.2]},
-                "neardup_clusters": {"R50": [1014.6, None]},
-            },
-        },
-    }
-    c = _compact_for_tail(payload)
-    line = json.dumps(c, separators=(",", ":"))
-    assert len(line) <= _TAIL_BUDGET
-    # the echo subset is what rides stdout — not the 100-tier table
-    assert c["crossover"]["recorded"] == {
-        "dup_spans": {"R50": [59.7, 270.2]},
-        "neardup_clusters": {"R50": [1014.6, None]},
-    }
-    # original payload untouched (ADVICE r5 regression)
-    assert "recorded_echo" in payload["crossover"]
-    assert "dedup_tier_recorded" in payload["crossover"]
-
-
-def test_live_recorded_tables_all_popped_and_line_fits():
-    """Round 10: the first clean bench of the round printed a
-    2784-char line because r10_tier_recorded was missing from the pop
-    list — every recorded table a future round adds must join it. This
-    builds the tail payload from the LIVE module globals (all recorded
-    tables, the real recorded_echo, a full-size headline dict and a
-    live-set-sized crossover queries dict) and pins the budget, so an
-    un-popped table can never reach the driver again."""
-    import bench
-    from tools import crossover as xo_mod
-
-    xo = {
-        "R": 20,
-        "rows": {t: 12_000_000 for t in ("documents", "events", "orders", "lineitem")},
-        "queries": {
-            name: {"spark_s": 12.345, "duckdb_s": 3.456}
-            for name in xo_mod.DEFAULT_QUERIES
-        },
-        "spark_total_s": 137.534,
-        "duckdb_total_s": 157.962,
-        "spark_over_duckdb": 0.871,
-        "dedup_tier_recorded": xo_mod.RECORDED_DEDUP_TIERS,
-        "kv_tier_recorded": xo_mod.RECORDED_KV_TIERS,
-        "r6_tier_recorded": xo_mod.RECORDED_R6_TIERS,
-        "r7_tier_recorded": xo_mod.RECORDED_R7_TIERS,
-        "r8_tier_recorded": xo_mod.RECORDED_R8_TIERS,
-        "r9_tier_recorded": xo_mod.RECORDED_R9_TIERS,
-        "r10_tier_recorded": xo_mod.RECORDED_R10_TIERS,
-        "recorded_echo": xo_mod._recorded_echo(),
-    }
-    payload = {
         "metric": "headline_queries_total",
         "value": 164.549,
         "unit": "sec",
-        "shared_prev_total": 160.748,
-        "queries": {name: 9.876 for name in bench.HEADLINE},
+        "queries": queries,
         "sf": 0.1,
-        "crossover": xo,
-    }
-    out = bench._compact_for_tail(payload)
-    line = json.dumps(out, separators=(",", ":"))
-    assert len(line) <= bench._TAIL_BUDGET, len(line)
-    # no raw recorded table may survive into the tail
-    for k in list(out.get("crossover", {})):
-        assert not k.endswith("_tier_recorded"), k
-
-
-def test_recorded_trim_keeps_head_families(spark=None):
-    """Round 10: when the full echo does not fit, families shed from
-    the END — the head (current round's stories) must survive on the
-    tail rather than the whole section vanishing."""
-    import bench
-    from tools import crossover as xo_mod
-
-    xo = {
-        "R": 20,
-        "queries": {
-            name: {"spark_s": 12.345, "duckdb_s": 3.456}
-            for name in xo_mod.DEFAULT_QUERIES
+        "crossover": {
+            "R": 20,
+            "rows": {t: 12_000_000 for t in ("documents", "events", "orders")},
+            "queries": xo_queries,
+            "spark_total_s": 1234.567,
+            "duckdb_total_s": 1234.567,
+            "spark_over_duckdb": 0.871,
+            "weak": weak_cells(xo_queries),
         },
-        "spark_total_s": 1.0,
-        "duckdb_total_s": 1.0,
-        "spark_over_duckdb": 1.0,
-        "recorded_echo": xo_mod._recorded_echo(),
     }
-    payload = {
-        "metric": "headline_queries_total",
-        "value": 1.0,
-        "unit": "sec",
-        "queries": {name: 9.876 for name in bench.HEADLINE},
-        "sf": 0.1,
-        "crossover": xo,
+
+
+def _line(payload: dict) -> str:
+    from bench import _compact_for_tail
+
+    return json.dumps(_compact_for_tail(payload), separators=(",", ":"))
+
+
+def test_compact_line_fits_tail_budget():
+    """Every HEADLINE cell plus the four xo20: cells at their widest
+    print (4 chars), next to the crossover summary, fits the budget —
+    nothing is ever shed."""
+    from bench import _TAIL_BUDGET, HEADLINE
+    from tools.crossover import DEFAULT_QUERIES
+
+    payload = _payload(12.34)
+    line = _line(payload)
+    assert len(line) <= _TAIL_BUDGET, len(line)
+    back = json.loads(line)
+    assert len(back["queries"]) == len(HEADLINE) + len(_XO_CELLS)
+    assert all(v == 12.3 for v in back["queries"].values())
+    assert back["value"] == 164.549
+    assert back["crossover"] == {
+        "R": 20,
+        "spark_total_s": 1234.6,
+        "duckdb_total_s": 1234.6,
+        "spark_over_duckdb": 0.871,
+        "n_weak_total": len(DEFAULT_QUERIES),  # every cell is 3.6x
     }
-    first_family = next(iter(xo_mod.RECORDED_ECHO_KEYS))
-    out = bench._compact_for_tail(payload)
-    line = json.dumps(out, separators=(",", ":"))
-    assert len(line) <= bench._TAIL_BUDGET, len(line)
-    rec = out.get("crossover", {}).get("recorded")
-    assert rec, "recorded echo vanished wholesale — trim stage bypassed"
-    assert first_family in rec
+
+
+@pytest.mark.parametrize("seconds, printed", [(0.04, 0.04), (0.5, 0.5), (0.996, 1.0)])
+def test_subsecond_cells_print_nonzero(seconds, printed):
+    back = json.loads(_line(_payload(seconds)))
+    assert set(back["queries"].values()) == {printed}
+
+
+def test_compact_does_not_mutate_payload_or_tier_globals():
+    from tools import crossover
+
+    far_before = copy.deepcopy(crossover.FAR_TIERS)
+    payload = _payload(1.2345)
+    payload["crossover"]["error"] = "x" * 300
+    before = copy.deepcopy(payload)
+    out = json.loads(_line(payload))
+    assert payload == before, "caller's payload mutated"
+    assert crossover.FAR_TIERS == far_before, "FAR_TIERS mutated"
+    assert out["crossover"]["error"] == "x" * 100
+
+
+def test_shed_without_queries_copies_crossover():
+    """A crossover without per-query pairs or a weak list still gets
+    its summary on the tail, in a new dict; the caller's stays whole."""
+    from bench import _compact_for_tail
+
+    payload = _payload(2.0)
+    for k in ("queries", "weak"):
+        del payload["crossover"][k]
+    before = copy.deepcopy(payload)
+    out = _compact_for_tail(payload)
+    assert payload == before, "caller's crossover mutated"
+    assert out["crossover"] is not payload["crossover"]
+    assert out["crossover"] == {
+        "R": 20,
+        "spark_total_s": 1234.6,
+        "duckdb_total_s": 1234.6,
+        "spark_over_duckdb": 0.871,
+    }
+
+
+def test_live_recorded_tables_all_popped_and_line_fits():
+    """The tail whitelists its crossover keys, so no table the payload
+    carries (replica rows, per-query pairs, the weak list, the far
+    tiers, or any future ``*_tier_recorded`` key) reaches the line."""
+    from bench import _TAIL_BUDGET
+    from tools.crossover import FAR_TIERS
+
+    payload = _payload(12.34)
+    payload["crossover"]["far_tiers"] = dict(FAR_TIERS)
+    payload["crossover"]["future_tier_recorded"] = {
+        name: {"R50": {"spark_s": 1.0, "duckdb_s": 2.0}} for name in FAR_TIERS
+    }
+    line = _line(payload)
+    assert len(line) <= _TAIL_BUDGET, len(line)
+    assert set(json.loads(line)["crossover"]) == {
+        "R", "spark_total_s", "duckdb_total_s", "spark_over_duckdb", "n_weak_total",
+    }
 
 
 def test_xo_scaling_cells_shed_last():
-    """Round 13 (VERDICT r12 item 8): the xo20: scaling cells are the
-    driver's only tail channel for the c8/c32 comparison — when the
-    line overflows they shed AFTER the recorded echo, and one at a
-    time, never wholesale."""
-    from bench import _TAIL_BUDGET, _compact_for_tail
+    """The four xo20: scaling cells are never shed: each is on the
+    widest line, under its own name, at tail precision."""
+    from bench import _TAIL_BUDGET
 
-    payload = _payload(with_queries=True)
-    # inflate: many headline timings + the xo cells
-    payload["queries"] = {f"query_name_padding_{i:03d}": 1.0 for i in range(55)}
-    for q in ("dup_spans", "minhash_lsh_exact", "copurchase_triangles"):
-        payload["queries"][f"xo20:{q}"] = 12.3
-    out = _compact_for_tail(payload)
-    line = json.dumps(out, separators=(",", ":"))
-    assert len(line) <= _TAIL_BUDGET
-    kept = [k for k in out["queries"] if k.startswith("xo20:")]
-    # the fixture line fits without dropping every xo cell; at least
-    # one must survive, and the recorded echo must already be gone
-    # before any xo cell is sacrificed
-    if len(kept) < 3:
-        assert "recorded" not in out.get("crossover", {})
+    payload = _payload(12.34)
+    for q, s in zip(_XO_CELLS, (0.043, 12.34, 62.24, 427.04)):
+        payload["queries"][f"xo20:{q}"] = s
+    line = _line(payload)
+    assert len(line) <= _TAIL_BUDGET, len(line)
+    kept = {k: v for k, v in json.loads(line)["queries"].items() if k.startswith("xo20:")}
+    assert kept == {
+        "xo20:dup_spans": 0.04,
+        "xo20:minhash_lsh_exact": 12.3,
+        "xo20:copurchase_triangles": 62.2,
+        "xo20:bigram_pmi": 427.0,
+    }
+
+
+def test_weak_disposition_matches_recorded_classes():
+    """One cell per class, each as the recorded-tier tables gave it."""
+    from tools.crossover import weak_disposition
+
+    assert weak_disposition("dominant_part_suppliers", 5.0) == ["R400", 0.1, "win"]
+    assert weak_disposition("dup_spans", 3.0) == ["R100", None, "win"]  # DuckDB DNF
+    assert weak_disposition("custdist_histogram", 54.8) == ["R400", 7.19, "floor"]
+    assert weak_disposition("bigram_pmi", 12.0) == ["R200", 4.92, "converging"]
+    assert weak_disposition("nation_trade_volume", 5.0) == ["R400", 6.12, "open"]
+    assert weak_disposition("word_count_top10", 7.0) == ["-", None, "open"]
+
+
+def test_weak_cells_worst_first_with_dispositions():
+    from tools.crossover import weak_cells
+
+    weak = weak_cells({
+        "bigram_pmi": {"spark_s": 3.6, "duckdb_s": 0.3},
+        "word_count_top10": {"spark_s": 7.0, "duckdb_s": 0.5},
+        "fast_query": {"spark_s": 0.5, "duckdb_s": 1.0},
+        "spark_only": {"spark_s": 9.0, "duckdb_s": None},
+    })
+    assert weak == {
+        "word_count_top10": {
+            "ratio": 14.0, "far_tier": "-", "far_ratio": None, "class": "open",
+        },
+        "bigram_pmi": {
+            "ratio": 12.0, "far_tier": "R200", "far_ratio": 4.92,
+            "class": "converging",
+        },
+    }

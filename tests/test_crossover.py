@@ -79,3 +79,17 @@ def test_subset_replica_dir_is_isolated(em_replica):
     # the subset replica contains embeddings but not the heavy facts
     assert os.path.exists(f"{em_replica}/embeddings.parquet")
     assert not os.path.exists(f"{em_replica}/lineitem.parquet")
+
+
+def test_lineitem_and_pklineitem_refused_before_any_write(tmp_path, monkeypatch):
+    """Both replicas write {dest}/lineitem.parquet, so asking for both
+    would silently keep whichever ran second. Spark-free: the refusal
+    comes before the session or the cache dir is touched."""
+    import os
+
+    import tools.crossover as xo
+
+    monkeypatch.setenv("SPARK_GRAFT_CROSSOVER_DIR", str(tmp_path))
+    with pytest.raises(ValueError, match="pklineitem"):
+        xo.ensure_scaled(None, SF_DIR, 2, facts=("lineitem", "pklineitem"))
+    assert os.listdir(tmp_path) == []

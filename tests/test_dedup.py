@@ -65,7 +65,8 @@ def test_packed_pair_key_identical_to_two_long_shape(spark):
     """Round-13: when the doc-id range fits 31 bits, the pair exchange
     keys on ONE packed long pk = (a << 32) | b and unpacks after the
     count. Forced on (min_docs=0) it must be bit-identical to the
-    two-long shape, including at a 31-bit boundary id."""
+    two-long shape, including at a 31-bit boundary id, for int32 ids
+    as well as int64 (an unwidened int shift would merge pairs)."""
     boundary = (1 << 31) - 1
     rows = [
         (0, "a b c d e f g h", "en", "s", 10),  # id 0 packs to pk = b
@@ -73,15 +74,18 @@ def test_packed_pair_key_identical_to_two_long_shape(spark):
         (boundary, "a b c d e f g h y", "en", "s", 10),
         (12, "z y x w v u t s", "en", "s", 10),
     ]
-    docs = _docs(spark, rows)
     kw = dict(threshold=0.3, max_df=0.5)
-    packed = ngram_jaccard_pairs(docs, packed_pairs_min_docs=0, **kw)
-    plain = ngram_jaccard_pairs(docs, packed_pairs_min_docs=None, **kw)
-    assert "shiftleft" in packed._jdf.queryExecution().toString()
-    assert "shiftleft" not in plain._jdf.queryExecution().toString()
-    got = sorted((r["a"], r["b"], r["jaccard"]) for r in packed.collect())
-    want = sorted((r["a"], r["b"], r["jaccard"]) for r in plain.collect())
-    assert got == want and got  # non-empty: pairs actually flowed
+    for id_type in ("long", "int"):
+        schema = DOCS.replace("doc_id long", f"doc_id {id_type}")
+        docs = spark.createDataFrame(rows, schema)
+        packed = ngram_jaccard_pairs(docs, packed_pairs_min_docs=0, **kw)
+        plain = ngram_jaccard_pairs(docs, packed_pairs_min_docs=None, **kw)
+        assert "shiftleft" in packed._jdf.queryExecution().toString()
+        assert "shiftleft" not in plain._jdf.queryExecution().toString()
+        assert packed.schema == plain.schema, id_type
+        got = sorted((r["a"], r["b"], r["jaccard"]) for r in packed.collect())
+        want = sorted((r["a"], r["b"], r["jaccard"]) for r in plain.collect())
+        assert got == want and got, id_type  # non-empty: pairs flowed
 
 
 def test_packed_pair_gate_refuses_out_of_range_ids(spark):

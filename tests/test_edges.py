@@ -62,15 +62,13 @@ def test_tokens_of_degenerate_text(spark):
 
 
 def test_bench_tail_compaction_fits_driver_capture():
-    """VERDICT r4 item 2: the driver records the LAST 2000 chars of
-    bench stdout — BENCH_r04 lost its headline when the JSON line
-    outgrew that. The compacted line must fit with margin for a
-    representative payload (30 headline + 14 crossover queries + every
-    recorded tier), and shedding must preserve the headline."""
+    """Callers record the LAST 2000 chars of bench stdout; a line that
+    outgrows that loses its headline. The compacted line must fit for a
+    representative payload (every headline + 14 crossover queries), and
+    growth of the crossover section must not reach the line."""
     import json
 
     import bench
-    from tools.crossover import RECORDED_DEDUP_TIERS
 
     payload = {
         "metric": "headline_queries_total",
@@ -88,23 +86,19 @@ def test_bench_tail_compaction_fits_driver_capture():
             "spark_total_s": 123.456,
             "duckdb_total_s": 234.567,
             "spark_over_duckdb": 0.526,
-            "dedup_tier_recorded": RECORDED_DEDUP_TIERS,
         },
     }
     line = json.dumps(bench._compact_for_tail(payload), separators=(",", ":"))
     assert len(line) <= bench._TAIL_BUDGET, len(line)
     back = json.loads(line)
     assert back["value"] == 46.712 and len(back["queries"]) == len(bench.HEADLINE)
-    # recorded tiers survive compaction as [spark_s, duckdb_s] pairs
-    if "recorded" in back["crossover"]:
-        assert back["crossover"]["recorded"]["neardup_clusters"]["R50"][1] is None
 
-    # pathological growth still yields a parseable (shed) line
+    # pathological growth of the crossover section leaves the line as it was
     payload["crossover"]["queries"] = {
         f"very_long_crossover_query_name_padding_{i:03d}": {
             "spark_s": 1.0, "duckdb_s": 2.0}
         for i in range(60)
     }
     line2 = json.dumps(bench._compact_for_tail(payload), separators=(",", ":"))
-    assert len(line2) <= bench._TAIL_BUDGET
+    assert line2 == line
     assert json.loads(line2)["crossover"]["spark_over_duckdb"] == 0.526

@@ -1137,9 +1137,9 @@ def test_triangle_above_gate_wedge_plan_shape(spark):
     must keep the proven m^1.5 wedge shape — equi-joins only (the wedge
     self-join on u and the closure join on (y, z)), no broadcast
     adjacency sets, no array_intersect, nothing wider than id/degree
-    longs. Forced via broadcast_edges_max=0 (the far-tier pk-R8 replica
-    exercises the same dispatch at data scale: 9.57 M oriented edges >
-    the 5 M gate)."""
+    longs. Forced via broadcast_edges_max=0: the gate is 10 M oriented
+    edges, so even the far-tier pk-R8 replica (9.57 M) takes the fast
+    path and does not reach this fallback."""
     from distributed_computing_spark.caching import release_tracked
     from distributed_computing_spark.operators.graph import (
         copurchase_edges, triangle_counts,

@@ -16,8 +16,8 @@ Usage: python tools/edit1_tier.py [R ...]      (default: 2 3)
        SPARK_GRAFT_EDIT1_DUCK_TIMEOUT=seconds  (skip/DNF the quadratic
        side past this budget; DNF is recorded as null, the
        neardup_clusters convention)
-Prints one JSON line per tier; numbers land in
-tools/crossover.RECORDED_R8_TIERS + BASELINE.md.
+Prints one JSON line per tier; numbers land in BASELINE.md,
+"Round-8: FastSS slope".
 """
 
 from __future__ import annotations

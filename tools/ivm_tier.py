@@ -18,8 +18,8 @@ it*. This harness measures the claim directly on R×-replicated orders:
    motion the crossover tiers use).
 
 Usage: python tools/ivm_tier.py [R ...]   (default: 20 100)
-Prints one JSON line per tier; numbers are recorded in
-tools/crossover.py RECORDED_R7_TIERS + BASELINE.md.
+Prints one JSON line per tier; numbers are recorded in BASELINE.md,
+"Round-7: IVM paying regime".
 """
 
 from __future__ import annotations
